@@ -9,11 +9,13 @@ Cluster:
 Local smoke:
     python jobs/run_pipeline.py --synthetic 10000 --output /tmp/kg_out
 
-The job is chunked and resumable: each chunk commits triples + a
-lineage row atomically-enough (per-chunk partition overwrite); rerun
-after a crash re-executes only chunks without lineage. See
-rdf_to_text_spark/sinks/merge.py for the protocol and the Iceberg
-MERGE INTO contract used when a catalog is configured.
+The job is chunked and resumable: one run commits all of its pending
+chunks in a single extract/write job (per-chunk partition overwrite),
+then writes one lineage row per chunk; every row's wall_sec is that
+job's shared wall. A crash before the edges commit leaves none of the
+run's chunks behind, and a rerun re-executes only chunks without
+lineage. See rdf_to_text_spark/sinks/merge.py for the protocol and the
+Iceberg MERGE INTO contract used when a catalog is configured.
 """
 
 from __future__ import annotations

@@ -371,8 +371,8 @@ def kg_extract_triples_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 @_register_extra("kg_resumable_extract", fixtures.gold_triples_sql())
 def kg_resumable_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """K6/north_rule resumability driven through the driver gate: the
-    chunked sink (sinks/merge.py:run_resumable — per-chunk lineage rows
-    committed in the same single pass as the triples via observe) is
+    chunked sink (sinks/merge.py:run_resumable — one extract/write job
+    per call commits its pending chunks, then their lineage rows) is
     run on HALF the input (chunks 0-1), then resumed over the FULL
     input. The resume run must process exactly the unfinished chunks
     {2, 3} (asserted — a broken skip surfaces as a driver error, not a
@@ -388,9 +388,9 @@ def kg_resumable_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     work = tempfile.mkdtemp(prefix="resumable_drv_")
     try:
         # Session-cached rendered-pages parquet (shared with the
-        # streaming flagship): each of the 6 chunk jobs SCANS the input
-        # instead of re-rendering the whole corpus to discard 3/4 of it
-        # — the contract a real resumable job has, where the input
+        # streaming flagship): both run_resumable calls SCAN the input
+        # instead of re-rendering the whole corpus — the contract a
+        # real resumable job has, where the input
         # table already exists.
         pages = spark.read.parquet(_stream_pages_dir(spark, sf_dir))
         half = pages.filter(F.pmod(F.col("doc_id"), F.lit(4)) < 2)
@@ -517,7 +517,7 @@ def kg_e2e_crawl(spark: SparkSession, sf_dir: str) -> DataFrame:
       verified at j ∈ [0.86, 0.95]; max cross-doc j = 0.67 — threshold
       0.75 sits between, measured in tests/test_e2e_crawl.py) →
       rich-HTML extraction through the chunked RESUMABLE sink
-      (sinks/merge.py:run_resumable, 4 chunks, lineage observed) →
+      (sinks/merge.py:run_resumable, 4 chunks, one commit job) →
       entity canonicalization via distributed CC star rounds.
 
     The oracle never touches WARC/HTML: gold triples from doc_id
