@@ -31,13 +31,12 @@ def main() -> None:
     ap.add_argument("--suffix", default="", help="suffix for explain files, e.g. _before")
     args = ap.parse_args()
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    os.environ["SPARK_GRAFT_CPUS"] = cpus
     from rdf_to_text_spark.session import get_spark
     from rdf_to_text_spark import queries_catalog
     from pyspark.sql import functions as F
 
-    spark = get_spark(app_name="bench_extra", master=f"local[{cpus}]")
+    # local[$SPARK_GRAFT_CPUS], or local[*] when unset
+    spark = get_spark(app_name="bench_extra")
     spark.range(100000).groupBy(F.col("id") % 7).count().collect()
     spark.sql("SELECT id, row_number() OVER (ORDER BY id) FROM range(1000)").collect()
 

@@ -1,8 +1,10 @@
 """Text analysis for training-data pipelines: language ID, quality
 scoring, token counting, fingerprinting.
 
-All pure engine expressions (whole-stage codegen, no Python) so the
-DuckDB oracles can reproduce them exactly. Ratios are rounded to fixed
+Pure engine expressions (whole-stage codegen, no Python) so the
+DuckDB oracles can reproduce them exactly — except
+`winnow_fingerprints`, an Arrow-batched numpy kernel whose every step
+still has a SQL spelling. Ratios are rounded to fixed
 decimals at the operator boundary — the cross-engine hash contract.
 """
 
@@ -544,7 +546,6 @@ def winnow_fingerprints(
     id_col: str = "doc_id",
     k: int = 5,
     w: int = 8,
-    kernel: str = "arrow",
 ) -> DataFrame:
     """Winnowing document fingerprints (Schleimer, Wilkerson & Aiken,
     "Winnowing: Local Algorithms for Document Fingerprinting", SIGMOD
@@ -563,140 +564,26 @@ def winnow_fingerprints(
     they form a single (short) window and contribute their rightmost
     minimal shingle.
 
-    Kernels (same rows either way; equivalence-tested): the DEFAULT is
-    ``kernel="arrow"`` — the numpy sliding-window mapInPandas — because
-    the expression kernel's nested higher-order functions allocate
-    boxed arrays per row on the ONE shared JVM heap and measured nearly
-    FLAT 8→32-core scaling on this box, while the Arrow kernel scales
-    0.61-0.77 and is 2.1-2.4× faster absolute (BENCH.md r7 winnow
-    annotation; default flipped r8 per the r7 verdict). ``kernel=
-    "expr"`` remains the fully-engine-side form the independent DuckDB
-    oracle replays: one narrow projection — tokenize, shingle-hash
-    (transform over a sequence), per-window rightmost-argmin (zip_with
-    over window starts), distinct, explode; zero shuffle, zero Python.
-    Work is O(shingles * w) per document with w a small constant.
-    Density: expected selected fraction is 2/(w+1) of shingles
-    (SIGMOD 2003 §4), so the output is ~4x smaller than the shingle set
-    at the default w=8.
-    """
-    if k < 1 or w < 1:
-        raise ValueError(f"k and w must be >= 1 (got k={k}, w={w})")
-    if kernel == "arrow":
-        return _winnow_arrow(docs, text_col, id_col, k, w)
-    if kernel != "expr":
-        raise ValueError(f"kernel must be 'expr' or 'arrow' (got {kernel!r})")
-    toks = F.filter(_ws_tokens(text_col), lambda t: t != F.lit(""))
-    d = docs.select(F.col(id_col).alias("doc_id"), toks.alias("toks")).filter(
-        F.size("toks") >= k
-    )
-    # hv[i] = 32-bit slot of md5(space-joined shingle at 0-based i)
-    hv = F.transform(
-        F.sequence(F.lit(0), F.size("toks") - k),
-        lambda i: F.conv(
-            F.substring(F.md5(F.concat_ws(" ", F.slice("toks", i + 1, k))), 1, 8),
-            16,
-            10,
-        ).cast("long"),
-    )
-    d = d.select("doc_id", hv.alias("hv"))
-    m = F.size("hv")
-    eff = F.least(F.lit(w), m)  # short docs: one window of all shingles
-    starts = F.sequence(F.lit(0), F.greatest(m - w, F.lit(0)))
-    wmins = F.transform(starts, lambda j: F.array_min(F.slice("hv", j + 1, eff)))
-    # rightmost position of the window minimum, per window start
-    sel = F.array_distinct(
-        F.zip_with(
-            starts,
-            wmins,
-            lambda j, mn: F.array_max(
-                F.filter(
-                    F.sequence(j, j + eff - 1),
-                    lambda p: F.get("hv", p) == mn,
-                )
-            ),
-        )
-    )
-    return d.select("doc_id", "hv", F.explode(sel).alias("pos")).select(
-        "doc_id",
-        F.col("pos").cast("long").alias("pos"),
-        F.get("hv", "pos").alias("fp"),
-    )
+    Kernel: a numpy sliding window inside one mapInPandas. An
+    engine-side form (nested higher-order functions) allocates boxed
+    arrays per row on the ONE shared JVM heap and measured nearly flat
+    8→32-core scaling, while process-per-core Python workers sidestep
+    that wall (BENCH.md round-7 winnow annotation). Every step still
+    has a direct SQL spelling, which the DuckDB oracle of
+    `text_winnow_fingerprint` replays. Work is O(shingles * w) per
+    document with w a small constant. Density: expected selected
+    fraction is 2/(w+1) of shingles (SIGMOD 2003 §4), so the output is
+    ~4x smaller than the shingle set at the default w=8.
 
-
-def winnow_match_pairs(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 5,
-    w: int = 8,
-    max_docs_per_fp: int = 64,
-) -> DataFrame:
-    """Cross-document containment candidates from winnowing
-    fingerprints — the join half of the MOSS pipeline (SIGMOD 2003 §5:
-    build the fingerprint index, report documents sharing selected
-    fingerprints): (doc_a, doc_b, n_shared) for every unordered doc
-    pair sharing >= 1 selected fingerprint, n_shared = the count of
-    DISTINCT shared fp values. By the winnowing guarantee, any pair
-    sharing a verbatim run of >= w + k - 1 tokens appears here — the
-    local/plagiarism-span complement to MinHash-LSH's whole-doc
-    resemblance candidates (`operators/dedup.py`).
-
-    Scale shape: the `minhash_lsh_candidates` ladder discipline — the
-    per-doc fingerprint sets are deduped to (doc, fp), fp groups larger
-    than `max_docs_per_fp` are dropped BEFORE the self-join (boilerplate
-    fingerprints — a shingle shared by thousands of pages — would
-    otherwise explode quadratically; same rule as the LSH max_bucket
-    cap), and the join is ids-only on the fp key with doc_a < doc_b.
-    One distinct + one count-window + one hash join + one pair groupBy,
-    all on uniform md5-slot keys.
-    """
-    fps = winnow_fingerprints(docs, text_col, id_col, k, w).select(
-        F.col("doc_id"), "fp"
-    ).distinct()
-    fp_w = Window.partitionBy("fp")
-    kept = (
-        fps.withColumn("_n", F.count(F.lit(1)).over(fp_w))
-        .filter(F.col("_n") <= max_docs_per_fp)
-        .drop("_n")
-    )
-    return (
-        kept.alias("x")
-        .join(
-            kept.alias("y"),
-            (F.col("x.fp") == F.col("y.fp"))
-            & (F.col("x.doc_id") < F.col("y.doc_id")),
-        )
-        .groupBy(
-            F.col("x.doc_id").alias("doc_a"),
-            F.col("y.doc_id").alias("doc_b"),
-        )
-        .agg(F.count_distinct(F.col("x.fp")).alias("n_shared"))
-    )
-
-
-def _winnow_arrow(
-    docs: DataFrame, text_col: str, id_col: str, k: int, w: int
-) -> DataFrame:
-    """Arrow kernel for :func:`winnow_fingerprints` (the DEFAULT since
-    r8) — same output as the expression kernel, numpy sliding-window
-    in mapInPandas. Why: the expression kernel's nested higher-order
-    functions allocate boxed arrays per row on the ONE shared JVM heap,
-    and measured 8→32 scaling collapses to ~0.35 while a
-    raw-multiprocessing md5 control on the same box reaches 0.68
-    (BENCH.md round-7 winnow annotation); process-per-core Python
-    workers sidestep the shared-heap wall (the rich-extract kernel
-    precedent). ``kernel="expr"`` remains available as the fully
-    engine-side form the DuckDB oracle replays — the two kernels are
-    equivalence-tested on corpus and crafted inputs
-    (tests/test_text_analysis.py).
-
-    Output columns are ``doc_id, pos, fp`` regardless of ``id_col`` —
-    matching the expression kernel's aliasing (ADVICE r7) — and rows
-    with a NULL id are skipped like rows with NULL text.
+    Output columns are ``doc_id, pos, fp`` regardless of ``id_col``;
+    rows with a NULL id or NULL text are skipped.
 
     Tokenization matches the engine exactly: split on the Java-regex
     ASCII \\s class [ \\t\\n\\x0b\\f\\r] with empties dropped (NOT
-    Python str.split(), whose Unicode whitespace set is wider)."""
+    Python str.split(), whose Unicode whitespace set is wider).
+    """
+    if k < 1 or w < 1:
+        raise ValueError(f"k and w must be >= 1 (got k={k}, w={w})")
     import re
 
     import numpy as np
@@ -745,6 +632,57 @@ def _winnow_arrow(
                 {"doc_id": out_doc, "pos": out_pos, "fp": out_fp}
             ).astype({"doc_id": "int64", "pos": "int64", "fp": "int64"})
 
-    return docs.select(F.col(id_col).alias(id_col), F.col(text_col)).mapInPandas(
+    return docs.select(F.col(id_col), F.col(text_col)).mapInPandas(
         run, schema="doc_id long, pos long, fp long"
+    )
+
+
+def winnow_match_pairs(
+    docs: DataFrame,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    k: int = 5,
+    w: int = 8,
+    max_docs_per_fp: int = 64,
+) -> DataFrame:
+    """Cross-document containment candidates from winnowing
+    fingerprints — the join half of the MOSS pipeline (SIGMOD 2003 §5:
+    build the fingerprint index, report documents sharing selected
+    fingerprints): (doc_a, doc_b, n_shared) for every unordered doc
+    pair sharing >= 1 selected fingerprint, n_shared = the count of
+    DISTINCT shared fp values. By the winnowing guarantee, any pair
+    sharing a verbatim run of >= w + k - 1 tokens appears here — the
+    local/plagiarism-span complement to MinHash-LSH's whole-doc
+    resemblance candidates (`operators/dedup.py`).
+
+    Scale shape: the `minhash_lsh_candidates_md5` ladder discipline — the
+    per-doc fingerprint sets are deduped to (doc, fp), fp groups larger
+    than `max_docs_per_fp` are dropped BEFORE the self-join (boilerplate
+    fingerprints — a shingle shared by thousands of pages — would
+    otherwise explode quadratically; same rule as the LSH max_bucket
+    cap), and the join is ids-only on the fp key with doc_a < doc_b.
+    One distinct + one count-window + one hash join + one pair groupBy,
+    all on uniform md5-slot keys.
+    """
+    fps = winnow_fingerprints(docs, text_col, id_col, k, w).select(
+        F.col("doc_id"), "fp"
+    ).distinct()
+    fp_w = Window.partitionBy("fp")
+    kept = (
+        fps.withColumn("_n", F.count(F.lit(1)).over(fp_w))
+        .filter(F.col("_n") <= max_docs_per_fp)
+        .drop("_n")
+    )
+    return (
+        kept.alias("x")
+        .join(
+            kept.alias("y"),
+            (F.col("x.fp") == F.col("y.fp"))
+            & (F.col("x.doc_id") < F.col("y.doc_id")),
+        )
+        .groupBy(
+            F.col("x.doc_id").alias("doc_a"),
+            F.col("y.doc_id").alias("doc_b"),
+        )
+        .agg(F.count_distinct(F.col("x.fp")).alias("n_shared"))
     )

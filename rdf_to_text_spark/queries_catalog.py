@@ -71,7 +71,8 @@ ORACLES: dict[str, str] = {}
 #   breadth proven; q1/q3/q18 stay), multimodal_resize_geometry
 #   (metadata arithmetic; three real codecs now in-window),
 #   multimodal_decode_bmp (JPEG/PNG are strict supersets of the BMP
-#   path), dedup_simhash_md5 (simhash twin coverage),
+#   path), dedup_simhash_md5 (near-dup coverage stays in-window via
+#   dedup_minhash_stream),
 #   dedup_minhash_md5_pairs (dedup_minhash_stream keeps the exact same
 #   minhash semantics hash-gated in-window; batch form also hash-gated
 #   inside kg_e2e_crawl), web_pagerank (the converged superset
@@ -1211,11 +1212,13 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register_extra("dedup_minhash_pairs")  # rows-only: pd.util.hash_array not ANSI-SQL
+@_register_extra("dedup_minhash_pairs")  # rows-only: NULL/empty docs kept (no oracle)
 def dedup_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash-LSH near-dup candidate pairs (fast path; the algorithm
-    is hash-checked via the md5-portable twin below)."""
-    return dedup.minhash_lsh_candidates(_docs(spark, sf_dir), cleanup=_CLEANUPS)
+    """MinHash-LSH near-dup candidate pairs over the unfiltered corpus:
+    the same operator as `dedup_minhash_md5_pairs` below, which filters
+    empty/NULL docs so its DuckDB oracle can replay it. Kept as a
+    bench.py headline name."""
+    return dedup.minhash_lsh_candidates_md5(_docs(spark, sf_dir), cleanup=_CLEANUPS)
 
 
 def _minhash_ab_values() -> str:
@@ -1281,10 +1284,9 @@ def dedup_minhash_md5_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash-LSH candidates over a PORTABLE hash family: md5 shingle
     hashes, wrap-explicit universal hashing, md5 band buckets — the
     ENTIRE candidate pipeline (signatures, banding, bucket cap, pair
-    dedup, agreement estimate) replayed by the DuckDB oracle. The
-    pd.util.hash_array variant stays the fast path. Empty/NULL docs
-    filtered on both sides (NULL text diverges: the engine shingles it
-    as [''], the oracle drops it)."""
+    dedup, agreement estimate) replayed by the DuckDB oracle. Empty/NULL
+    docs filtered on both sides (NULL text diverges: the engine
+    shingles it as [''], the oracle drops it)."""
     docs = _docs(spark, sf_dir).filter(F.trim(F.col("text")) != "")
     return dedup.minhash_lsh_candidates_md5(docs, cleanup=_CLEANUPS)
 
@@ -1357,7 +1359,6 @@ def dedup_minhash_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"{work}/ckpt",
             query_name=qname,
             max_files_per_trigger=n_files // 2,
-            portable_md5=True,
             engine="join",
         )
         q.awaitTermination()
@@ -1387,14 +1388,6 @@ def dedup_minhash_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.createDataFrame(pairs, "doc_a long, doc_b long")
 
 
-@_register_extra("dedup_simhash")  # rows-only: xxhash64 not portable SQL
-def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """64-bit SimHash per document (zero-shuffle numpy vote over
-    engine-side xxhash64 — the fast path; the algorithm itself is
-    hash-checked via the md5-portable twin below)."""
-    return dedup.simhash(_docs(spark, sf_dir))
-
-
 @_register_extra(
     "dedup_simhash_md5",
     r"""WITH toks AS (
@@ -1421,12 +1414,11 @@ FROM nib GROUP BY doc_id""",
 def dedup_simhash_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash with a PORTABLE token hash (top 64 bits of md5), so token
     hashing, the per-bit majority vote, and the signature assembly are
-    all replayed by the DuckDB oracle and hash-checked — the rows-only
-    xxhash64 variant's algorithm, proven. Emitted as hex (bit 63 needs
-    no signed-long wraparound on either engine). Empty/whitespace-only
-    docs are filtered on BOTH sides (the engine would emit a 0
-    signature while the oracle's token filter drops the doc — align by
-    dropping them everywhere)."""
+    all replayed by the DuckDB oracle and hash-checked. Emitted as hex
+    (bit 63 needs no signed-long wraparound on either engine).
+    Empty/whitespace-only docs are filtered on BOTH sides (the engine
+    would emit a 0 signature while the oracle's token filter drops the
+    doc — align by dropping them everywhere)."""
     docs = _docs(spark, sf_dir).filter(F.trim(F.col("text")) != "")
     return dedup.simhash_md5(docs)
 
@@ -6590,7 +6582,7 @@ def text_winnow_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     framed window function, and the rightmost-argmin via a range join +
     MAX — a disagreement anywhere in the tie rule, window framing, or
     the short-document single-window branch shifts the hash. Spark side
-    is one narrow zero-shuffle projection (see the operator docstring
+    is one narrow zero-shuffle Arrow map (see the operator docstring
     for the 100-TB shape)."""
     return text_analysis.winnow_fingerprints(
         _docs(spark, sf_dir), k=5, w=8

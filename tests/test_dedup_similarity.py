@@ -1,9 +1,11 @@
 """Dedup ladder + similarity search operators."""
 
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 from rdf_to_text_spark.operators import dedup, similarity
+from rdf_to_text_spark.streaming.dedup_stream import streaming_minhash_candidates
 
 
 def _docs(spark, texts):
@@ -29,7 +31,7 @@ def test_minhash_near_dups(spark):
     near = base.replace("today", "tomorrow")
     far = "completely unrelated text about spark shuffle partitions and arrow batches"
     docs = _docs(spark, [base, near, far])
-    pairs = dedup.minhash_lsh_candidates(docs, num_perm=64, bands=16).collect()
+    pairs = dedup.minhash_lsh_candidates_md5(docs, num_perm=64, bands=16).collect()
     found = {(r.doc_a, r.doc_b): r.est_jaccard for r in pairs}
     assert (0, 1) in found and found[(0, 1)] > 0.5
     assert (0, 2) not in found and (1, 2) not in found
@@ -37,36 +39,20 @@ def test_minhash_near_dups(spark):
 
 def test_minhash_identical_docs(spark):
     docs = _docs(spark, ["same tokens here exactly", "same tokens here exactly"])
-    pairs = dedup.minhash_lsh_candidates(docs).collect()
+    pairs = dedup.minhash_lsh_candidates_md5(docs).collect()
     assert len(pairs) == 1 and pairs[0].est_jaccard == 1.0
 
 
 def test_simhash_properties(spark):
     docs = _docs(spark, ["alpha beta gamma", "alpha beta gamma", "delta epsilon zeta"])
-    got = {r.doc_id: r.simhash for r in dedup.simhash(docs).collect()}
+    got = {r.doc_id: r.simhash_hex for r in dedup.simhash_md5(docs).collect()}
     assert got[0] == got[1] != got[2]
-
-
-def test_simhash_matches_dataframe_twin(spark):
-    """The zero-shuffle numpy simhash and the explode-based DataFrame
-    formulation share one hash family → identical signatures."""
-    texts = [
-        "the quick brown fox jumps over the lazy dog",
-        "alpha beta gamma delta epsilon",
-        "single",
-        "repeated repeated repeated tokens tokens",
-        "Mixed CASE and   extra   whitespace  ",
-    ]
-    docs = _docs(spark, texts)
-    fast = {r.doc_id: r.simhash for r in dedup.simhash(docs).collect()}
-    slow = {r.doc_id: r.simhash for r in dedup.simhash_dataframe(docs).collect()}
-    assert fast == slow
 
 
 def test_simhash_plan_has_no_shuffle(spark):
     """The scale path must be a narrow map: no exchange in the plan."""
     docs = _docs(spark, ["a b c", "d e f"])
-    plan = dedup.simhash(docs)._jdf.queryExecution().executedPlan().toString()
+    plan = dedup.simhash_md5(docs)._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan, plan
 
 
@@ -79,12 +65,12 @@ def test_minhash_bucket_cap(spark):
     docs = _docs(spark, same + near)
     # cap below the degenerate bucket size: the 12-identical group's
     # buckets all blow the cap, so none of its 66 pairs emit
-    pairs = dedup.minhash_lsh_candidates(docs, max_bucket=8).collect()
+    pairs = dedup.minhash_lsh_candidates_md5(docs, max_bucket=8).collect()
     got = {(r.doc_a, r.doc_b) for r in pairs}
     assert (12, 13) in got
     assert all(a >= 12 for a, _ in got), got
     # default cap (unhit): all pairs emit
-    pairs_all = dedup.minhash_lsh_candidates(docs).collect()
+    pairs_all = dedup.minhash_lsh_candidates_md5(docs).collect()
     assert len(pairs_all) == 66 + 1
 
 
@@ -93,7 +79,7 @@ def test_minhash_pair_join_carries_no_signatures(spark):
     signatures re-attach after pair dedup (100-TB shuffle budget)."""
     docs = _docs(spark, ["a b c d", "a b c e"])
     plan = (
-        dedup.minhash_lsh_candidates(docs)
+        dedup.minhash_lsh_candidates_md5(docs)
         ._jdf.queryExecution()
         .optimizedPlan()
         .toString()
@@ -210,9 +196,9 @@ def test_simhash_md5_matches_hashlib_twin(spark):
 
 
 def test_minhash_md5_twin_near_dups(spark):
-    """The portable-hash MinHash twin must find the same near-dup
-    structure as the fast variant: identical docs at est 1.0, clear
-    near-dups surfaced, unrelated pairs absent."""
+    """The md5 MinHash at its default parameters finds the near-dup
+    structure: identical docs at est 1.0, clear near-dups surfaced,
+    unrelated pairs absent."""
     base = "the quick brown fox jumps over the lazy dog again and again today"
     near = base.replace("today", "tomorrow")
     far = "completely unrelated text about spark shuffle partitions and arrow batches"
@@ -233,13 +219,15 @@ def test_null_text_does_not_crash_hash_ops(spark):
         [(0, "real text here"), (1, None), (2, "")],
         "doc_id long, text string",
     )
-    sh = {r.doc_id: r.simhash for r in dedup.simhash(docs).collect()}
-    assert sh[1] == 0 and sh[2] == 0 and sh[0] != 0
     shm = {r.doc_id: r.simhash_hex for r in dedup.simhash_md5(docs).collect()}
     assert shm[1] == "0" * 16 and shm[2] == "0" * 16 and shm[0] != "0" * 16
-    # minhash paths: just must not raise
-    dedup.minhash_lsh_candidates(docs).collect()
-    dedup.minhash_lsh_candidates_md5(docs).collect()
+    # minhash: must not raise; NULL text is the empty string, so the
+    # NULL and "" docs share every band and pair at est 1.0
+    pairs = {
+        (r.doc_a, r.doc_b): r.est_jaccard
+        for r in dedup.minhash_lsh_candidates_md5(docs).collect()
+    }
+    assert pairs == {(1, 2): 1.0}
 
 
 def test_ivf_cells_partition_pruning(spark, tmp_path):
@@ -305,35 +293,157 @@ def test_ngram_jaccard_ignores_non_candidate_docs(spark):
     assert abs(rows[0].jaccard - 0.5) < 1e-12
 
 
-def test_minhash_md5_arrow_kernel_equivalence(spark):
-    """r8: the Arrow md5-signature kernel must emit EXACTLY the
-    expression kernel's signatures — corpus slice plus crafted
-    whitespace/short/degenerate docs."""
-    from rdf_to_text_spark.operators.dedup import minhash_signatures_md5
+_P61 = (1 << 61) - 1
 
-    crafted = [
-        (100, "one two three four five"),
-        (101, "a b"),
-        (102, "  tab\tand\nnewline   separated tokens here now ok yes sir "),
-        (103, ""),
-        (104, None),
-        (105, "x"),
-        (106, "MiXeD Case TOKENS lower the Same way"),
+# docs whose edges or bodies hold the engine's \s class and the control
+# chars Spark's trim keeps (it strips U+0020 only)
+_CRAFTED_TEXTS = [
+    "one two three four five",
+    "a b",
+    "  tab\tand\nnewline   separated tokens here now ok yes sir ",
+    "",
+    None,
+    "x",
+    "MiXeD Case TOKENS lower the Same way",
+    "\tone two three four",
+    "one two three four\n",
+    "\x0bone two three four",
+    "\x01one two three four",
+    "one two three four\x1c",
+    "\r\n one two three \f",
+    "   ",
+]
+
+
+def _md5_sig_reference(tokens, num_perm=64, shingle_k=3, seed=42):
+    """MinHash signature from engine-made tokens, hashed in pure
+    Python: x = top 64 bits of md5(shingle),
+    h_k = ((a_k*x) mod 2^64 + b_k) mod 2^64 mod (2^61 - 1)."""
+    import hashlib
+
+    rng = np.random.RandomState(seed)
+    a = [int(v) for v in rng.randint(1, _P61, size=num_perm, dtype=np.int64)]
+    b = [int(v) for v in rng.randint(0, _P61, size=num_perm, dtype=np.int64)]
+    k = shingle_k
+    shingles = [
+        " ".join(tokens[i : i + k]) for i in range(max(len(tokens) - k, 0) + 1)
     ]
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").select(
-        "doc_id", "text"
-    ).unionByName(spark.createDataFrame(crafted, "doc_id long, text string"))
-    a = {
-        (r.doc_id, tuple(r.sig))
-        for r in minhash_signatures_md5(docs, kernel="expr").collect()
-    }
-    b = {
-        (r.doc_id, tuple(r.sig))
-        for r in minhash_signatures_md5(docs, kernel="arrow").collect()
-    }
-    assert a == b and len(a) > 0
+    xs = [int(hashlib.md5(s.encode()).hexdigest()[:16], 16) for s in shingles]
+    m64 = 1 << 64
+    return tuple(
+        min(((ak * x) % m64 + bk) % m64 % _P61 for x in xs) for ak, bk in zip(a, b)
+    )
 
-    import pytest as _pytest
 
-    with _pytest.raises(ValueError, match="kernel"):
-        minhash_signatures_md5(docs, kernel="nope").collect()
+def _assert_md5_sigs_match_reference(docs, n_docs):
+    """One Spark job: the operator's signatures joined to the engine's
+    own tokens (split(lower(trim(text)), '\\s+'), NULL as "")."""
+    toks = F.split(F.lower(F.trim(F.coalesce(F.col("text"), F.lit("")))), r"\s+")
+    rows = (
+        dedup.minhash_signatures_md5(docs)
+        .join(docs.select("doc_id", toks.alias("toks")), "doc_id")
+        .collect()
+    )
+    assert len(rows) == n_docs
+    for r in rows:
+        assert tuple(r.sig) == _md5_sig_reference(list(r.toks)), (r.doc_id, r.toks)
+
+
+def test_minhash_md5_matches_engine_tokenized_reference(spark):
+    """The Arrow md5 signatures equal a hashlib reference over the
+    engine's own tokenization — crafted docs with leading/trailing
+    tabs, newlines and control chars (the corpus itself is replayed by
+    the `dedup_minhash_md5_pairs` DuckDB oracle)."""
+    _assert_md5_sigs_match_reference(_docs(spark, _CRAFTED_TEXTS), len(_CRAFTED_TEXTS))
+
+
+def test_minhash_md5_reference_property(spark):
+    """Hypothesis: arbitrary ASCII docs over the engine's whitespace
+    class plus control chars tokenize and hash like the reference."""
+    from hypothesis import given, settings
+    from hypothesis import strategies as st
+
+    text = st.one_of(
+        st.none(), st.text(alphabet="abAB \t\n\x0b\f\r\x01\x1c", max_size=24)
+    )
+
+    @settings(max_examples=20, deadline=None)
+    @given(st.lists(text, min_size=1, max_size=30))
+    def check(texts):
+        _assert_md5_sigs_match_reference(_docs(spark, texts), len(texts))
+
+    check()
+
+
+@pytest.mark.parametrize(
+    "call",
+    [
+        lambda docs: dedup.minhash_lsh_candidates_md5(docs, num_perm=64, bands=128),
+        lambda docs: dedup.minhash_lsh_candidates_md5(docs, num_perm=64, bands=0),
+        lambda docs: dedup.minhash_lsh_candidates_md5(docs, num_perm=64, bands=24),
+        lambda docs: dedup.minhash_lsh_candidates_md5(docs, shingle_k=0),
+        lambda docs: dedup.minhash_lsh_candidates_md5(docs, max_bucket=1),
+        lambda docs: dedup.minhash_lsh_candidates_md5(docs, num_perm=0),
+        lambda docs: dedup.minhash_signatures_md5(docs, num_perm=0),
+        lambda docs: dedup.minhash_signatures_md5(docs, shingle_k=0),
+        lambda docs: streaming_minhash_candidates(docs, bands=128),
+        lambda docs: streaming_minhash_candidates(docs, shingle_k=0),
+        lambda docs: streaming_minhash_candidates(docs, max_bucket=1),
+        lambda docs: dedup.ngram_jaccard(docs, _pairs(docs), n=0),
+        lambda docs: dedup.ngram_jaccard(docs, _pairs(docs), n=-1),
+    ],
+    ids=[
+        "lsh-bands>num_perm",
+        "lsh-bands=0",
+        "lsh-bands-not-divisor",
+        "lsh-shingle_k=0",
+        "lsh-max_bucket=1",
+        "lsh-num_perm=0",
+        "sig-num_perm=0",
+        "sig-shingle_k=0",
+        "stream-bands>num_perm",
+        "stream-shingle_k=0",
+        "stream-max_bucket=1",
+        "ngram-n=0",
+        "ngram-n=-1",
+    ],
+)
+def test_out_of_range_lsh_params_rejected(spark, call):
+    """Out-of-range parameters raise at call time instead of returning
+    silent garbage (bands > num_perm paired every doc; shingle_k=0 and
+    n=0 reported similarity 1.0 for unrelated docs)."""
+    docs = _docs(spark, ["alpha beta gamma delta", "one two three four", "x y z w"])
+    with pytest.raises(ValueError):
+        call(docs)
+
+
+def _pairs(docs):
+    return docs.select(F.col("doc_id").alias("doc_a"), (F.col("doc_id") + 1).alias("doc_b"))
+
+
+def _rdd_ids_in_storage(spark):
+    infos = spark.sparkContext._jsc.sc().getRDDStorageInfo()
+    return {infos[i].id() for i in range(len(infos))}
+
+
+def test_checkpoint_handle_releases_blocks(spark):
+    """unpersist() on a localCheckpoint'ed frame frees its blocks: the
+    checkpoint RDD leaves the storage status."""
+    df = spark.range(1000).selectExpr("id", "id * 2 AS v").localCheckpoint(eager=True)
+    rdd_id = df._jdf.queryExecution().analyzed().rdd().id()
+    assert rdd_id in _rdd_ids_in_storage(spark)
+    dedup._LocalCheckpointHandle(df).unpersist()
+    assert rdd_id not in _rdd_ids_in_storage(spark)
+
+
+def test_checkpoint_handle_warns_when_nothing_to_release(spark, caplog):
+    """A handle over a frame that is not a checkpoint cannot free
+    anything: it logs a warning naming the plan class instead of
+    passing silently."""
+    import logging
+
+    df = spark.range(10).selectExpr("id + 1 AS id")
+    with caplog.at_level(logging.WARNING, logger=dedup.__name__):
+        dedup._LocalCheckpointHandle(df).unpersist()
+    msgs = [r.getMessage() for r in caplog.records if r.name == dedup.__name__]
+    assert any("not released" in m and "Project" in m for m in msgs), msgs

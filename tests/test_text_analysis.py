@@ -211,6 +211,39 @@ def test_winnow_matches_pure_python_oracle(spark):
     assert got == exp
 
 
+def test_winnow_arrow_kernel_equivalence(spark):
+    # the Arrow kernel must emit EXACTLY the reference's rows — corpus
+    # slice plus crafted short/degenerate/whitespace/NULL docs, with
+    # the engine's ASCII \s tokenization on the reference side
+    import re
+
+    from rdf_to_text_spark.operators.text_analysis import winnow_fingerprints
+
+    crafted = [
+        (100, "one two three four five"),
+        (101, "a b"),
+        (102, "  tab\tand\nnewline   separated tokens here now ok yes sir "),
+        (103, "r r r r r r r r r r r r r r r r"),
+        (104, None),
+    ]
+    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").select(
+        "doc_id", "text"
+    ).unionByName(spark.createDataFrame(crafted, "doc_id long, text string"))
+    ws = re.compile(r"[ \t\n\x0b\f\r]+")
+    exp = {
+        (r.doc_id, pos, fp)
+        for r in docs.collect()
+        if r.text is not None
+        for pos, fp in _winnow_ref([t for t in ws.split(r.text) if t], 5, 8)
+    }
+    got = {
+        (r.doc_id, r.pos, r.fp)
+        for r in winnow_fingerprints(docs, k=5, w=8).collect()
+    }
+    assert got == exp and len(got) > 0
+    assert {d for d, _, _ in got} >= {100, 102, 103}
+
+
 def test_winnow_guarantee_every_window_covered(spark):
     # winnowing guarantee: every w-window of shingles contains at least
     # one selected position -> consecutive selected positions gap <= w
@@ -262,41 +295,10 @@ def test_winnow_match_pairs_shared_run_and_cap(spark):
     assert winnow_match_pairs(many, k=5, w=8, max_docs_per_fp=4).count() == 0
 
 
-def test_winnow_arrow_kernel_equivalence(spark):
-    # the Arrow fast path must emit EXACTLY the expression kernel's
-    # rows — corpus slice plus crafted short/degenerate/whitespace docs
-    from rdf_to_text_spark.operators.text_analysis import winnow_fingerprints
-
-    crafted = [
-        (100, "one two three four five"),
-        (101, "a b"),
-        (102, "  tab\tand\nnewline   separated tokens here now ok yes sir "),
-        (103, "r r r r r r r r r r r r r r r r"),
-        (104, None),
-    ]
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").select(
-        "doc_id", "text"
-    ).unionByName(spark.createDataFrame(crafted, "doc_id long, text string"))
-    a = {
-        (r.doc_id, r.pos, r.fp)
-        for r in winnow_fingerprints(docs, k=5, w=8, kernel="expr").collect()
-    }
-    b = {
-        (r.doc_id, r.pos, r.fp)
-        for r in winnow_fingerprints(docs, k=5, w=8, kernel="arrow").collect()
-    }
-    assert a == b and len(a) > 0
-
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="kernel"):
-        winnow_fingerprints(docs, kernel="nope")
-
-
 def test_winnow_arrow_custom_id_col_and_null_id(spark):
-    """ADVICE r7: the arrow kernel must emit the SAME 'doc_id' output
-    column as the expr kernel whatever the input id column is named,
-    and must skip NULL-id rows instead of crashing."""
+    """ADVICE r7: the output id column is 'doc_id' whatever the input
+    id column is named, and NULL-id rows are skipped instead of
+    crashing."""
     from rdf_to_text_spark.operators.text_analysis import winnow_fingerprints
 
     docs = spark.createDataFrame(
@@ -304,7 +306,7 @@ def test_winnow_arrow_custom_id_col_and_null_id(spark):
          (None, "this row has a null id and must be skipped not crash ok")],
         "page_id long, text string",
     )
-    out = winnow_fingerprints(docs, id_col="page_id", kernel="arrow")
+    out = winnow_fingerprints(docs, id_col="page_id")
     assert out.columns == ["doc_id", "pos", "fp"]
     rows = out.collect()
     assert rows and all(r.doc_id == 1 for r in rows)
